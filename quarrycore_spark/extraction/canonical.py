@@ -37,17 +37,23 @@ _TITLE = re.compile(r"<title\b[^>]*>(.*?)</title\s*>", re.I | re.S)
 _HEAD = re.compile(r"<head\b[^>]*>.*?</head\s*>", re.I | re.S)
 _TAG = re.compile(r"<[^>]+>")
 _WS = re.compile(r"\s+", re.ASCII)
+# ASCII characters str.split() treats as whitespace but re.ASCII \s (and
+# Java/RE2 \s) does not: the file/group/record/unit separators
+_SPLIT_ONLY_WS = "\x1c\x1d\x1e\x1f"
 
 
-def _collapse_ws(s: str) -> str:
-    """`_WS.sub(" ", s).strip()`, with the ASCII fast path: for ASCII
-    strings `" ".join(s.split())` is byte-identical (str.split's
-    whitespace set restricted to ASCII == re.ASCII \s) and ~10x faster —
-    this was the single most expensive regex pass of the extraction
-    cascade (41 us/doc, run 2-3x per page). Non-ASCII strings keep the
-    regex path: str.split would additionally split on unicode whitespace
-    (e.g. nbsp), which the pinned Java-\s contract must not."""
-    if s.isascii():
+def collapse_ws(s: str) -> str:
+    """`_WS.sub(" ", s).strip()`: collapse ASCII whitespace runs to one
+    space and trim — the one whitespace normalizer of extraction and of
+    shingle normalization (operators/signatures.normalize_text).
+
+    Fast path: for ASCII strings without FS/GS/RS/US, `" ".join(s.split())`
+    is byte-identical and ~4x faster — this was the single most expensive
+    regex pass of the extraction cascade (41 us/doc, run 2-3x per page).
+    Other strings keep the regex: str.split would also split on unicode
+    whitespace (e.g. nbsp) and on \\x1c-\\x1f, which the pinned Java-\\s
+    contract must not."""
+    if s.isascii() and not any(c in s for c in _SPLIT_ONLY_WS):
         return " ".join(s.split())
     return _WS.sub(" ", s).strip()
 
@@ -79,7 +85,7 @@ def canonicalize_html(raw: bytes | str, _pre_stripped: str | None = None) -> str
         s = _pre_stripped
     s = _TAG.sub(" ", s)
     s = _html.unescape(s)
-    return _collapse_ws(s)
+    return collapse_ws(s)
 
 
 def extract_title(raw: bytes | str) -> str | None:
@@ -87,7 +93,7 @@ def extract_title(raw: bytes | str) -> str | None:
     m = _TITLE.search(s)
     if not m:
         return None
-    t = _collapse_ws(_html.unescape(_TAG.sub(" ", m.group(1))))
+    t = collapse_ws(_html.unescape(_TAG.sub(" ", m.group(1))))
     return t or None
 
 
@@ -109,7 +115,7 @@ def extract_main_text(raw: bytes | str, _pre_stripped: str | None = None) -> str
         s = _CHROME.sub(" ", s)
     s = _TAG.sub(" ", s)
     s = _html.unescape(s)
-    return _collapse_ws(s)
+    return collapse_ws(s)
 
 
 def extract_body_text(raw: bytes | str, _pre_stripped: str | None = None) -> str:
@@ -125,7 +131,7 @@ def extract_body_text(raw: bytes | str, _pre_stripped: str | None = None) -> str
     s = _HEAD.sub(" ", s)
     s = _TAG.sub(" ", s)
     s = _html.unescape(s)
-    return _collapse_ws(s)
+    return collapse_ws(s)
 
 
 # Chrome-CLASS tokens inside a declared content region: the regex
@@ -242,7 +248,7 @@ LINK_PRUNE_WORK_BUDGET = 10 * LINK_PRUNE_MAX_REGION
 
 
 def _plain_len(fragment: str) -> int:
-    return len(_collapse_ws(_html.unescape(_TAG.sub(" ", fragment))))
+    return len(collapse_ws(_html.unescape(_TAG.sub(" ", fragment))))
 
 
 def _prune_link_dense(s: str) -> str:
@@ -365,7 +371,7 @@ def extract_selector_text(raw: bytes | str, _pre_stripped: str | None = None) ->
                 joined = pruned
             joined = _TAG.sub(" ", joined)
             joined = _html.unescape(joined)
-            return _collapse_ws(joined)
+            return collapse_ws(joined)
     return ""
 
 
@@ -476,12 +482,8 @@ def extract_pages(
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
-        import os as _os
-        import time as _time
 
-        _klog = _os.environ.get("SPARK_GRAFT_KERNEL_LOG")
         for pdf in batches:
-            _t0 = _time.time() if _klog else 0.0
             hashes, extracted, titles, tiers, quality, errors = [], [], [], [], [], []
             for url, raw, lang in zip(pdf["url"], pdf["html"], pdf["lang"]):
                 try:
@@ -512,9 +514,6 @@ def extract_pages(
                 tiers.append(tier)
                 quality.append(q)
                 errors.append(err)
-            if _klog:
-                with open(f"{_klog}.ext.{_os.getpid()}", "a") as f:
-                    f.write(f"{len(pdf)} {_time.time() - _t0:.4f}\n")
             yield pd.DataFrame(
                 {
                     "url": pdf["url"],

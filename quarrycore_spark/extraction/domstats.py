@@ -31,7 +31,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from quarrycore_spark.extraction.canonical import _TAG, _WS, decode_html
+from quarrycore_spark.extraction.canonical import _TAG, collapse_ws, decode_html
 
 _OPEN_TAG = re.compile(r"<([a-zA-Z]\w*)(\s[^>]*)?>")
 _ANY_TAG = re.compile(r"<(/?)([a-zA-Z]\w*)(?:\s[^>]*)?(/?)>")
@@ -94,7 +94,7 @@ def dom_stats(raw: bytes | str) -> dict:
             depth = len(stack)
             max_depth = max(max_depth, depth)
 
-    vis = _WS.sub(" ", _TAG.sub(" ", s)).strip()
+    vis = collapse_ws(_TAG.sub(" ", s))
     return {
         "n_elements": n_elements,
         "n_distinct_tags": len(tag_counts),

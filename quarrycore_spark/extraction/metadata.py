@@ -49,7 +49,13 @@ from urllib.parse import urljoin, urlparse
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from quarrycore_spark.extraction.canonical import _TAG, _WS, _strip_ssc, decode_html
+from quarrycore_spark.extraction.canonical import (
+    _TAG,
+    _WS,
+    _strip_ssc,
+    collapse_ws,
+    decode_html,
+)
 
 # ---------------------------------------------------------------------------
 # Generic tag/attribute scanning (attribute-order-independent, unlike the
@@ -75,7 +81,7 @@ def _attrs(tag: str) -> dict[str, str]:
 
 
 def _clean(s: str) -> str:
-    return _WS.sub(" ", _html.unescape(_TAG.sub(" ", s))).strip()
+    return collapse_ws(_html.unescape(_TAG.sub(" ", s)))
 
 
 # ---------------------------------------------------------------------------
@@ -465,7 +471,7 @@ _HAS_LETTER = re.compile(r"[a-zA-Z]")
 
 def _clean_author_name(name: str) -> str:
     """Prefix/suffix stripping — reference AuthorInfo.__post_init__:76-96."""
-    name = _WS.sub(" ", name).strip()
+    name = collapse_ws(name)
     low = name.lower()
     for prefix in _NAME_PREFIXES:
         if low.startswith(prefix):

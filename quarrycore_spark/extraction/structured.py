@@ -26,8 +26,8 @@ from quarrycore_spark.extraction.canonical import (
     _SCRIPT,
     _STYLE,
     _TAG,
-    _WS,
     _find_balanced_blocks,
+    collapse_ws,
     decode_html,
 )
 
@@ -46,7 +46,7 @@ _CELL_START = re.compile(r"<(?:td|th)\b[^>]*>", re.I)
 
 
 def _clean_text(fragment: str) -> str:
-    return _WS.sub(" ", _html.unescape(_TAG.sub(" ", fragment))).strip()
+    return collapse_ws(_html.unescape(_TAG.sub(" ", fragment)))
 
 
 def _strip_noise(s: str) -> str:

@@ -22,7 +22,6 @@ Reference semantics covered (SURVEY.md §2.3):
 from __future__ import annotations
 
 import hashlib
-import re
 from collections.abc import Iterator
 
 import numpy as np
@@ -30,8 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from quarrycore_spark.config import DEFAULT_CONFIG, MERSENNE_31, DedupConfig
-
-_WS = re.compile(r"\s+", re.ASCII)
+from quarrycore_spark.extraction.canonical import collapse_ws
 
 # sig/bands values are residues mod the 31-bit Mersenne prime, so INT32
 # carries them exactly — half the bytes of bigint through the Arrow IPC,
@@ -54,14 +52,8 @@ def normalize_text(text: str) -> str:
     """Shingle-normalization contract (reference minhash_redis.py:174-176).
 
     Matches dialect.norm_text: collapse ASCII whitespace runs to one space,
-    trim, lowercase. re.ASCII keeps \\s aligned with Java/RE2 semantics.
-    ASCII fast path: " ".join(split()) is byte-identical there (str.split's
-    whitespace set restricted to ASCII == re.ASCII \\s) and ~10x faster;
-    non-ASCII text keeps the regex so unicode whitespace (nbsp etc.) is
-    NOT collapsed, exactly like Java \\s."""
-    if text.isascii():
-        return " ".join(text.split()).lower()
-    return _WS.sub(" ", text).strip().lower()
+    trim (extraction.canonical.collapse_ws), lowercase."""
+    return collapse_ws(text).lower()
 
 
 def char_shingles(nt: str, k: int) -> list[str]:
@@ -442,12 +434,7 @@ def with_signatures(
     b = np.array([p[1] for p in cfg.minhash_perms], dtype=np.int64)
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os as _os
-        import time as _time
-
-        _klog = _os.environ.get("SPARK_GRAFT_KERNEL_LOG")
         for pdf in batches:
-            _t0 = _time.time() if _klog else 0.0
             n = len(pdf)
             texts = pdf[text_col].astype(str).tolist()
             if family == "poly":
@@ -464,9 +451,6 @@ def with_signatures(
                     ch[j], sig[j], bands[j], sim[j] = (
                         c, s.astype(np.int32), bd.astype(np.int32), sm,
                     )
-            if _klog:
-                with open(f"{_klog}.sig.{_os.getpid()}", "a") as f:
-                    f.write(f"{n} {_time.time() - _t0:.4f} {_t0:.4f}\n")
             yield pd.DataFrame(
                 {
                     "doc_id": pdf[id_col].values,

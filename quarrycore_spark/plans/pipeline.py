@@ -10,7 +10,12 @@ Differences by design (SURVEY §3.1 "Spark translation"):
 * the mutable hash/LSH stores become groupBy + self-joins;
 * checkpoint/resume = stage-output parquet + an atomic JSON manifest
   (the reference's PipelineCheckpoint, pipeline.py:990-1033) — a killed
-  run resumes after the last completed stage;
+  run resumes after the last completed stage. Every stage runs this one
+  way (`_stage`);
+* the lineage table holds one row per parquet file a checkpointed stage
+  wrote (stage, partition_id = the write task, rows), read from the file
+  footers on the driver — no stage output is re-scanned. A write task
+  whose partition was empty writes no file, so it has no lineage row;
 * exact-dup edges are emitted as STARS (member→group-canonical), not
   member×member cliques: O(n) edges instead of O(n²) per group, same
   connected components.
@@ -33,6 +38,7 @@ from pyspark.sql import functions as F
 
 from quarrycore_spark.config import DEFAULT_CONFIG, DedupConfig
 from quarrycore_spark.extraction.canonical import extract_pages
+from quarrycore_spark.operators._partitioning import spread
 from quarrycore_spark.operators.cc import connected_components
 from quarrycore_spark.operators.lsh import verified_pairs
 from quarrycore_spark.operators.signatures import with_signatures
@@ -68,73 +74,95 @@ def _save_manifest(out_dir: str, man: dict) -> None:
 
 
 def _stage(
-    spark, out_dir, man, name, builder, resume=True, checkpoint=True,
-    stage_counts=True, extra_obs=None,
+    spark, out_dir, man, name, builder, resume=True, extra_obs=None,
 ) -> DataFrame:
     """Run one stage with checkpoint/resume: if the manifest records the
-    stage as complete, read its parquet instead of recomputing.
-
-    checkpoint=False (bench / short jobs): persist in memory instead of a
-    parquet round-trip — same computation, no resumability, none of the
-    fixed I/O barriers. Long 10^12-doc runs always checkpoint.
-
-    stage_counts=False skips the per-stage row count (one fewer job per
-    stage in checkpoint mode; the write itself observes the count instead).
+    stage as complete, read its parquet instead of recomputing; otherwise
+    write the stage output to OUT_DIR/name and read it back. The write
+    observes the row count (and any `extra_obs`) — no separate count job.
     """
     path = os.path.join(out_dir, name)
-    if checkpoint and resume and name in man["stages"]:
+    if resume and name in man["stages"]:
         return spark.read.parquet(man["stages"][name]["path"])
-    t0 = time.time()
-    df = builder()
-    if not checkpoint:
-        # localCheckpoint (not persist): truncates the logical plan, which
-        # both avoids recompute and sidesteps Catalyst constraint-rewrite
-        # errors when unioning cached subplans downstream
-        df = df.localCheckpoint(eager=True)
-        rows = df.count() if stage_counts else None
-    else:
-        from pyspark.sql import Observation
+    from pyspark.sql import Observation
 
-        # Bound the output file count to ~4 files per core: a stage inheriting
-        # hundreds of input splits would otherwise pay one parquet-writer
-        # buffer allocation per split (a serialized cost in this sandbox, and
-        # tiny-file pollution on a real cluster). coalesce (not repartition):
-        # no shuffle, never increases partitions, so it is a no-op for
-        # already-narrow stages — no plan inspection needed.
-        # SPARK_GRAFT_STAGE_FILES pins the count explicitly — the scaling
-        # legs set it so the N and 4N legs run the IDENTICAL job shape
-        # (same task count, same number of 32 MB writer-buffer
-        # allocations); letting it float with defaultParallelism gave the
-        # 1-core leg a structurally cheaper job (4 writer buffers vs 16),
-        # biasing the measured N-vs-4N ratio.
-        n_files = int(
-            os.environ.get("SPARK_GRAFT_STAGE_FILES", "0")
-        ) or 4 * spark.sparkContext.defaultParallelism
-        df = df.coalesce(n_files)
-        obs = Observation(f"stage_{name}_{int(t0 * 1000)}")
-        df.observe(
-            obs, F.count(F.lit(1)).alias("n"), *(extra_obs or [])
-        ).write.mode("overwrite").parquet(path)
-        got = obs.get
-        rows = int(got["n"])
-        if extra_obs:
-            man.setdefault("observations", {})[name] = {
-                k: v for k, v in got.items() if k != "n"
-            }
-        df = spark.read.parquet(path)
+    t0 = time.time()
+    # Bound the output file count to ~4 files per core: a stage inheriting
+    # hundreds of input splits would otherwise pay one parquet-writer
+    # buffer allocation per split (a serialized cost in this sandbox, and
+    # tiny-file pollution on a real cluster). coalesce (not repartition):
+    # no shuffle, never increases partitions, so it is a no-op for
+    # already-narrow stages — no plan inspection needed.
+    # SPARK_GRAFT_STAGE_FILES pins the count explicitly — the scaling
+    # legs set it so the N and 4N legs run the IDENTICAL job shape
+    # (same task count, same number of 32 MB writer-buffer
+    # allocations); letting it float with defaultParallelism gave the
+    # 1-core leg a structurally cheaper job (4 writer buffers vs 16),
+    # biasing the measured N-vs-4N ratio.
+    n_files = int(
+        os.environ.get("SPARK_GRAFT_STAGE_FILES", "0")
+    ) or 4 * spark.sparkContext.defaultParallelism
+    obs = Observation(f"stage_{name}_{int(t0 * 1000)}")
+    builder().coalesce(n_files).observe(
+        obs, F.count(F.lit(1)).alias("n"), *(extra_obs or [])
+    ).write.mode("overwrite").parquet(path)
+    got = obs.get
+    if extra_obs:
+        man.setdefault("observations", {})[name] = {
+            k: v for k, v in got.items() if k != "n"
+        }
     # drop operator-internal persisted intermediates now that the stage
     # output is materialized — keeps executor storage flat across stages
     from quarrycore_spark.operators._cache import release_tracked
 
     release_tracked(spark)
     man["stages"][name] = {
-        "path": path if checkpoint else None,
-        "rows": rows,
+        "path": path,
+        "rows": int(got["n"]),
         "wall_s": round(time.time() - t0, 3),
     }
-    if checkpoint:
-        _save_manifest(out_dir, man)
-    return df
+    _save_manifest(out_dir, man)
+    return spark.read.parquet(path)
+
+
+_LINEAGE_SCHEMA = "stage string, partition_id int, rows bigint"
+
+
+def _lineage_rows(man: dict) -> list[tuple[str, int, int]]:
+    """(stage, partition_id, rows) for every file a checkpointed stage
+    wrote, read from the parquet footers on the driver: no stage output is
+    scanned and no Spark job runs. One written file is one write task
+    (`part-<task partition>-...`); a task whose partition was empty writes
+    no file, so it has no row here."""
+    import pyarrow.dataset as pads
+
+    out = []
+    for stage, rec in man["stages"].items():
+        if rec["path"] is None:
+            continue
+        files = pads.dataset(rec["path"], format="parquet").get_fragments()
+        for frag in sorted(files, key=lambda f: f.path):
+            pid = int(os.path.basename(frag.path).split("-")[1])
+            out.append((stage, pid, frag.count_rows()))
+    return out
+
+
+def _write_lineage(path: str, rows: list[tuple[str, int, int]]) -> None:
+    """The lineage table as one parquet file, written on the driver."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stage, pid, n = zip(*rows) if rows else ((), (), ())
+    table = pa.table({
+        "stage": pa.array(stage, pa.string()),
+        "partition_id": pa.array(pid, pa.int32()),
+        "rows": pa.array(n, pa.int64()),
+    })
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
 
 def final_table(
@@ -214,16 +242,17 @@ def run_pipeline(
     out_dir: str,
     cfg: DedupConfig = DEFAULT_CONFIG,
     resume: bool = True,
-    min_overlap: int | None = None,
-    checkpoint: bool = True,
     substring: bool = True,
-    metadata: bool = False,
-    stage_counts: bool = True,
     cascade_threshold: int = 0,
-    domain_overrides: dict | None = None,
     family: str = "poly",
 ) -> PipelineResult:
-    """family selects the near-dup signature scheme end-to-end:
+    """Run every stage through `_stage`: each writes OUT_DIR/<stage>
+    parquet and records it in the manifest, so a killed run resumes after
+    its last completed stage (`resume=True`). `substring=False` skips the
+    classification-only containment stage; `cascade_threshold` is the
+    extraction quality gate (`extract_pages`).
+
+    family selects the near-dup signature scheme end-to-end:
     "poly" (default) — the vectorized rolling-hash family; "md5" — the
     oracle-parity scheme; "datasketch" — the reference's actual MinHash
     scheme (sha1→uint32, mod 2^61-1) with its S-curve-optimal banding,
@@ -234,32 +263,14 @@ def run_pipeline(
 
     # ---- stage 1: extraction (P1-P6, P11) -------------------------------
     # spread the (CPU-bound) extraction across all cores when the input has
-    # few parquet splits — but never shuffle the raw HTML if it already has
-    # enough partitions (the repartition would move every byte of the corpus)
-    par = spark.sparkContext.defaultParallelism
-    src = pages if pages.rdd.getNumPartitions() >= par else pages.repartition(par)
+    # few parquet splits; a no-op (no shuffle of the raw HTML) otherwise
     extracted = _stage(
         spark, out_dir, man, "extracted",
         lambda: extract_pages(
-            src, cascade_threshold=cascade_threshold,
-            domain_overrides=domain_overrides,
+            spread(pages), cascade_threshold=cascade_threshold,
         ).withColumn("doc_id", F.xxhash64("url")),
-        resume, checkpoint, stage_counts,
+        resume,
     )
-
-    # ---- stage 1b: page metadata (P14, opt-in, informational) -----------
-    # OpenGraph/Twitter/JSON-LD/canonical/date/author columns per page
-    # (extraction/metadata.py). Pure per-row Arrow pass over the same
-    # partitioning as extraction — no shuffle; does not feed dedup, so it
-    # is off by default (the graded detection pipeline is unchanged).
-    if metadata:
-        from quarrycore_spark.extraction.metadata import with_page_metadata
-
-        _stage(
-            spark, out_dir, man, "page_metadata",
-            lambda: with_page_metadata(src),
-            resume, checkpoint, stage_counts,
-        )
 
     # ---- stage 2: exact dedup (D1, D2) ----------------------------------
     # content_hash comes from the extraction UDF (sha256 over canonical
@@ -341,10 +352,7 @@ def run_pipeline(
         # same shingle/permutation/banding structure, ~300× cheaper per doc
         return with_signatures(survivors, cfg, family=family).drop("content_hash")
 
-    sigs = _stage(
-        spark, out_dir, man, "signatures", build_sigs,
-        resume, checkpoint, stage_counts,
-    )
+    sigs = _stage(spark, out_dir, man, "signatures", build_sigs, resume)
 
     # ---- stage 4: near-dup pair generation (D7-D10) ----------------------
     # ONE materialization for both pair families: minhash-verified and
@@ -362,9 +370,7 @@ def run_pipeline(
         )
         return mh.unionByName(sh)
 
-    pairs = _stage(
-        spark, out_dir, man, "pairs", build_pairs, resume, checkpoint, stage_counts,
-    )
+    pairs = _stage(spark, out_dir, man, "pairs", build_pairs, resume)
     mh_pairs = pairs.filter(F.col("kind") == "minhash")
     sh_pairs = pairs.filter(F.col("kind") == "simhash")
 
@@ -373,22 +379,18 @@ def run_pipeline(
     # contained_in relations (the reference's partial-match scan,
     # fuzzy_matcher.py:213-236). Informational output — does NOT feed CC
     # (containment is not duplication).
-    mo = min_overlap if min_overlap is not None else cfg.min_overlap
-
     def build_substring():
         from quarrycore_spark.operators.substring import (
             substring_extents,
             winnow_doc_pairs,
         )
 
+        mo = cfg.min_overlap
         cand = winnow_doc_pairs(survivors, mo, id_col="doc_id", text_col="text")
         return substring_extents(survivors, cand, mo, id_col="doc_id", text_col="text")
 
-    sub_pairs = (
-        _stage(spark, out_dir, man, "substring_pairs", build_substring, resume, checkpoint, stage_counts)
-        if substring
-        else None
-    )
+    if substring:
+        _stage(spark, out_dir, man, "substring_pairs", build_substring, resume)
 
     # ---- stage 5: connected components (D16) -----------------------------
     edges = (
@@ -400,54 +402,30 @@ def run_pipeline(
         spark, out_dir, man, "clusters",
         lambda: connected_components(
             edges, docs.select("doc_id"),
-            checkpoint_dir=os.path.join(out_dir, "cc") if checkpoint else None,
-            resume=resume,
+            checkpoint_dir=os.path.join(out_dir, "cc"), resume=resume,
         ),
-        resume, checkpoint, stage_counts,
+        resume,
     )
 
     # ---- stage 6: final labeled docs table (see final_table) -------------
     final = _stage(
         spark, out_dir, man, "docs_dedup",
         lambda: final_table(extracted, docs, clusters, mh_pairs, sh_pairs, cfg),
-        resume, checkpoint,
-        stage_counts,
+        resume,
         extra_obs=[F.sum(F.col("is_duplicate").cast("long")).alias("dups")],
     )
 
-    # ---- lineage: per-partition row counts per stage (north-rule lineage) --
-    def lineage_of(df: DataFrame, stage: str) -> DataFrame:
-        return (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .count()
-            .select(F.lit(stage).alias("stage"), "partition_id", F.col("count").alias("rows"))
-        )
-
-    lineage = (
-        lineage_of(extracted, "extracted")
-        .union(lineage_of(sigs, "signatures"))
-        .union(lineage_of(pairs, "pairs"))
-        .union(lineage_of(final, "docs_dedup"))
-    )
-    if sub_pairs is not None:
-        lineage = lineage.union(lineage_of(sub_pairs, "substring_pairs"))
-    lineage.write.mode("overwrite").parquet(os.path.join(out_dir, "lineage"))
+    # ---- lineage: rows per written file of every checkpointed stage ------
+    lineage_rows = _lineage_rows(man)
+    _write_lineage(os.path.join(out_dir, "lineage"), lineage_rows)
+    lineage = spark.createDataFrame(lineage_rows, _LINEAGE_SCHEMA)
 
     metrics = [
         {"stage": k, **v} for k, v in man["stages"].items()
     ]
-    # summary rides the docs_dedup write's Observation when available
-    # (checkpoint mode); otherwise one aggregate job.
-    obs = man.get("observations", {}).get("docs_dedup")
-    if obs is not None and man["stages"]["docs_dedup"].get("rows") is not None:
-        total = man["stages"]["docs_dedup"]["rows"]
-        dups = int(obs.get("dups") or 0)
-    else:
-        summary_row = final.select(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("is_duplicate").cast("long")).alias("d"),
-        ).collect()[0]
-        total, dups = summary_row["n"], summary_row["d"] or 0
+    # the summary rides the docs_dedup write's Observation
+    total = man["stages"]["docs_dedup"]["rows"]
+    dups = int(man["observations"]["docs_dedup"].get("dups") or 0)
     metrics.append(
         {
             "stage": "summary", "total_docs": total, "duplicate_docs": dups,

@@ -160,6 +160,10 @@ def test_pipeline_resume_identical(spark, corpus, pipeline_result):
     res2 = run_pipeline(spark, pages, out, resume=True)
     second = sorted(map(tuple, res2.docs.select("doc_id", "cluster_id", "duplicate_type").collect()))
     assert first == second
+    # resumed stages keep their files, so the lineage is unchanged too
+    assert sorted(map(tuple, res2.lineage.collect())) == sorted(
+        map(tuple, res.lineage.collect())
+    )
 
 
 def test_containment_pairs_detected(spark, corpus, pipeline_result):
@@ -189,8 +193,8 @@ def test_containment_pairs_detected(spark, corpus, pipeline_result):
     assert found / len(groups) >= 0.9, f"only {found}/{len(groups)} containment pairs found"
 
 
-def test_pipeline_lineage_and_metrics(pipeline_result):
-    res, _ = pipeline_result
+def test_pipeline_lineage_and_metrics(spark, pipeline_result):
+    res, out = pipeline_result
     stages = {m["stage"] for m in res.metrics}
     assert {"extracted", "exact", "signatures", "pairs",
             "clusters", "docs_dedup", "summary"} <= stages
@@ -199,6 +203,18 @@ def test_pipeline_lineage_and_metrics(pipeline_result):
     assert 0 < summary["duplicate_docs"] < N_PAGES
     lin = res.lineage.collect()
     assert sum(r["rows"] for r in lin if r["stage"] == "docs_dedup") == N_PAGES
+    # one row per written file of every checkpointed stage, clusters
+    # included, and each stage's file rows add up to its manifest count
+    checkpointed = {m["stage"]: m["rows"] for m in res.metrics if m.get("path")}
+    assert {"extracted", "signatures", "pairs", "substring_pairs",
+            "clusters", "docs_dedup"} <= set(checkpointed)
+    assert {r["stage"] for r in lin} == set(checkpointed)
+    for stage, rows in checkpointed.items():
+        assert sum(r["rows"] for r in lin if r["stage"] == stage) == rows, stage
+    # the table on disk is the one returned
+    assert sorted(map(tuple, spark.read.parquet(f"{out}/lineage").collect())) == sorted(
+        map(tuple, lin)
+    )
 
 
 def test_cascade_quality_gate_and_overrides():
@@ -316,7 +332,7 @@ def test_pipeline_recall_datasketch_family(spark, corpus):
     out = tempfile.mkdtemp(prefix="qc_ds_pipeline_")
     run_pipeline(
         spark, pages_dataframe(spark, corpus), out,
-        resume=False, checkpoint=True, substring=False, family="datasketch",
+        resume=False, substring=False, family="datasketch",
     )
     docs_dedup = spark.read.parquet(f"{out}/docs_dedup")
     url_to_id = {r["url"]: r["doc_id"] for r in docs_dedup.select("url", "doc_id").collect()}
@@ -347,7 +363,7 @@ def test_pipeline_with_reference_quality_gate(spark, corpus, tmp_path):
     out = str(tmp_path / "gated")
     res = run_pipeline(
         spark, pages_dataframe(spark, corpus), out,
-        resume=False, checkpoint=False, substring=False,
+        resume=False, substring=False,
         cascade_threshold=REFERENCE_GATE_SCALED,
     )
     rows = res.docs.select("doc_id", "extract_error").collect()

@@ -25,7 +25,14 @@ EDGE_TEXTS = [
     "a" * 6,
     "exactly7",
     "The quick brown fox jumps over the lazy dog. " * 5,
+    # FS/US are str.split() whitespace but not \s: kept, like DuckDB
+    "a\x1cb",
+    "x\x1f y",
 ]
+
+# every ASCII character is drawn too; these add the unicode whitespace
+# str.split() knows and re.ASCII \s does not
+UNICODE_WS = "\x85\xa0\u1680\u2000\u2007\u200a\u2028\u2029\u202f\u205f\u3000"
 
 
 @pytest.fixture(scope="module")
@@ -66,6 +73,33 @@ def test_edge_text_parity(text):
     assert sig.tolist() == sig_sql
     assert bands.tolist() == bands_sql
     assert sim == sim_sql
+
+
+def test_whitespace_fast_path_matches_regex():
+    """Property: the whitespace normalizer (its ASCII fast path included)
+    equals the re.ASCII regex definition for any mix of ASCII and unicode
+    whitespace. DuckDB is not the oracle here: RE2 \\s leaves out \\x0b,
+    which Python re.ASCII and Java \\s include."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from quarrycore_spark.extraction.canonical import _WS, collapse_ws
+
+    @settings(max_examples=500, deadline=None)
+    @given(
+        st.text(
+            alphabet=st.one_of(
+                st.characters(max_codepoint=0x7F), st.sampled_from(UNICODE_WS)
+            ),
+            max_size=30,
+        )
+    )
+    def check(text):
+        want = _WS.sub(" ", text).strip()
+        assert collapse_ws(text) == want
+        assert normalize_text(text) == want.lower()
+
+    check()
 
 
 def test_corpus_sample_parity(corpus_texts):
