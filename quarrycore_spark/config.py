@@ -5,20 +5,27 @@ Jaccard threshold 0.85 — src/quarrycore/config/config.py:195-208 in the
 reference) plus the parameters the north rule adds (SimHash Hamming blocking,
 suffix-array minimum overlap).
 
-Three hashing families coexist:
+Three hashing families coexist. All three run through the one batch
+signature kernel, ``operators/signatures.with_signatures(family=...)``,
+and differ only in their token hashing and slot arithmetic:
 
-* the *oracle family* (``operators/signatures.py`` family="md5" and the SQL
-  in ``functions/dialect.py``): md5-prefix integer hashing expressible
+* the *oracle family* (family="md5", mirrored by the SQL in
+  ``functions/dialect.py``): md5-prefix integer hashing expressible
   identically in Spark SQL and DuckDB SQL, used by the driver's
   correctness gate — all integer arithmetic, no floats;
-* the *poly family* (``operators/signatures.py`` family="poly"): the
-  vectorized rolling-hash scheme the production pipeline defaults to —
-  same shingle/permutation/banding structure, ~300× cheaper per doc;
-* the *datasketch family* (``operators/datasketch_compat.py``): a bit-exact
-  reimplementation of the public datasketch MinHash scheme (sha1→uint32,
-  universal hashing mod 2^61-1, seed 1), selectable end-to-end via
+* the *poly family* (family="poly"): the vectorized rolling-hash scheme
+  the production pipeline defaults to — same shingle/permutation/banding
+  structure, the cheapest per doc;
+* the *datasketch family* (family="datasketch", definitions in
+  ``operators/datasketch_compat.py``): a bit-exact reimplementation of the
+  public datasketch MinHash scheme (sha1→uint32, universal hashing mod
+  2^61-1, seed 1) with the poly SimHash, selectable end-to-end via
   ``run_pipeline(..., family="datasketch")`` for recall parity with the
   reference (src/quarrycore/dedup/minhash_redis.py:186-202).
+
+md5 and datasketch hash every distinct shingle with hashlib, in Python —
+several times poly's per-doc cost (ROADMAP, Direction 4) — so poly stays
+the production default.
 """
 
 from __future__ import annotations

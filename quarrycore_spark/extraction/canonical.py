@@ -40,12 +40,18 @@ _WS = re.compile(r"\s+", re.ASCII)
 # ASCII characters str.split() treats as whitespace but re.ASCII \s (and
 # Java/RE2 \s) does not: the file/group/record/unit separators
 _SPLIT_ONLY_WS = "\x1c\x1d\x1e\x1f"
+# DuckDB's `trim` set: U+0020 and the Unicode Zs space separators. Python's
+# str.strip() also trims \x1c-\x1f, \x85, U+2028 and U+2029, which DuckDB
+# keeps; Spark's trim removes only U+0020 (dialect.norm_text passes it
+# this set).
+TRIM_WS = " \xa0\u1680" + "".join(map(chr, range(0x2000, 0x200B))) + "\u202f\u205f\u3000"
 
 
 def collapse_ws(s: str) -> str:
-    """`_WS.sub(" ", s).strip()`: collapse ASCII whitespace runs to one
-    space and trim — the one whitespace normalizer of extraction and of
-    shingle normalization (operators/signatures.normalize_text).
+    """`_WS.sub(" ", s).strip(TRIM_WS)`: collapse ASCII whitespace runs to
+    one space and trim DuckDB's trim set — the one whitespace normalizer
+    of extraction and of shingle normalization
+    (operators/signatures.normalize_text).
 
     Fast path: for ASCII strings without FS/GS/RS/US, `" ".join(s.split())`
     is byte-identical and ~4x faster — this was the single most expensive
@@ -55,7 +61,7 @@ def collapse_ws(s: str) -> str:
     contract must not."""
     if s.isascii() and not any(c in s for c in _SPLIT_ONLY_WS):
         return " ".join(s.split())
-    return _WS.sub(" ", s).strip()
+    return _WS.sub(" ", s).strip(TRIM_WS)
 
 
 def decode_html(raw: bytes) -> str:

@@ -21,6 +21,7 @@ chars (60-bit) for SimHash.
 from __future__ import annotations
 
 from quarrycore_spark.config import MERSENNE_31, DedupConfig
+from quarrycore_spark.extraction.canonical import TRIM_WS
 
 SPARK = "spark"
 DUCKDB = "duckdb"
@@ -46,9 +47,15 @@ def h60(expr: str, dialect: str) -> str:
 
 
 def norm_text(expr: str, dialect: str) -> str:
-    """Shingle normalization contract: collapse whitespace, strip, lowercase."""
+    """Shingle normalization contract: collapse whitespace, strip, lowercase.
+
+    Spark's plain `trim` removes only U+0020, so the Spark side names
+    DuckDB's trim set (U+0020 and Unicode Zs, canonical.TRIM_WS)."""
     if dialect == SPARK:
-        return f"lower(trim(regexp_replace({expr}, '\\\\s+', ' ')))"
+        return (
+            f"lower(trim(BOTH '{TRIM_WS}' FROM "
+            f"regexp_replace({expr}, '\\\\s+', ' ')))"
+        )
     # duckdb replaces only the first match unless the 'g' flag is given
     return f"lower(trim(regexp_replace({expr}, '\\s+', ' ', 'g')))"
 

@@ -500,15 +500,25 @@ def ivf_topk(
     combined limit (max_queries + centroid cap + 2) guarantees that
     whenever either class exceeds its cap, more than cap rows of SOME
     over-cap class are collected (pigeonhole), so a RuntimeError still
-    fires before any oversized broadcast."""
+    fires before any oversized broadcast. A truncated collect cannot tell
+    which class is over its cap (or whether both are), so it raises one
+    error with both counts (lower bounds) and both strides."""
     spark = emb.sparkSession
     qv = quantized_frame(emb, spread=False).filter(F.col("na") > 0)
     cent_cap = MAX_BROADCAST_CENTROIDS
+    limit = max_queries + cent_cap + 2
     both = qv.filter(
         (F.col("vec_id") % stride == 0) | (F.col("vec_id") % cent_stride == 0)
-    ).limit(max_queries + cent_cap + 2).collect()
+    ).limit(limit).collect()
     qrows = [r for r in both if r["vec_id"] % stride == 0]
     crows = [r for r in both if r["vec_id"] % cent_stride == 0]
+    if len(both) == limit:
+        raise RuntimeError(
+            f"ivf_topk: sampled rows reached the combined cap {limit}: "
+            f">={len(qrows)} query vectors at stride={stride} (cap "
+            f"{max_queries}), >={len(crows)} centroids at "
+            f"stride={cent_stride} (cap {cent_cap}); raise the strides"
+        )
     if len(qrows) > max_queries:
         raise RuntimeError(
             f"ivf_topk: >{max_queries} query vectors at stride={stride}"

@@ -3,18 +3,21 @@ scheme the reference depends on (quarrycore pins datasketch via
 requirements.txt; its RedisMinHashLSH builds `MinHash(num_perm=128)` and
 `MinHashLSH(threshold=0.85)` — minhash_redis.py:186-202, 140-151).
 
-This module exists for recall parity "under identical shingle/signature
+The scheme exists for recall parity "under identical shingle/signature
 config" (north rule): when the reference's signatures matter bit-for-bit,
-use this family; the md5 family in signatures.py is the oracle-checkable
-default. The algorithm reimplemented here is public (datasketch docs +
-the MinHash literature):
+use this family; the md5 family is the oracle-checkable default. Its
+batch kernel is the shared one, `signatures.with_signatures(family=
+"datasketch")`; this module holds the scheme's definitions and the
+per-doc references the kernel is tested against. The algorithm
+reimplemented here is public (datasketch docs + the MinHash literature):
 
 * token hash: sha1, first 4 bytes little-endian (32-bit);
 * universal hashing: (a*h + b) mod (2^61 - 1), masked to 32 bits;
 * permutation constants from numpy RandomState(seed), a in [1, p),
   b in [0, p), drawn as datasketch does;
 * LSH (b, r): minimize 0.5*FP + 0.5*FN via numerical integration of the
-  S-curve (the datasketch `_optimal_param` objective).
+  S-curve (the datasketch `_optimal_param` objective). For threshold
+  0.85 / 128 perms that is DedupConfig's (8, 16), which the kernel uses.
 
 The container has no datasketch package, so tests assert the documented
 mathematical properties (determinism, unbiased Jaccard estimation,
@@ -25,11 +28,8 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
 
 from quarrycore_spark.config import DS_MAX_HASH, DS_MERSENNE_61, DS_SEED
 
@@ -64,16 +64,15 @@ def signature_from_hashes(
     over — datasketch computes in numpy uint64, where a*h (a < 2^61,
     h < 2^32) overflows, and bit-compatibility means reproducing exactly
     that arithmetic. Empty token sets keep the init value (max hash + 1).
+
+    One vectorized expression over the doc's tokens: the per-doc reference
+    the kernel (signatures._minhash_pass) is tested against.
     """
-    num_perm = len(a)
-    hv = np.full(num_perm, _HASH_RANGE, dtype=np.uint64)  # datasketch init
-    for h in hashes:
-        phv = np.bitwise_and(
-            (a * np.uint64(h) + b) % np.uint64(DS_MERSENNE_61),
-            np.uint64(DS_MAX_HASH),
-        )
-        hv = np.minimum(hv, phv)
-    return hv.astype(np.int64)
+    h = np.fromiter(hashes, dtype=np.uint64)
+    if not len(h):
+        return np.full(len(a), _HASH_RANGE, dtype=np.int64)
+    slots = (h[:, None] * a[None, :] + b[None, :]) % np.uint64(DS_MERSENNE_61)
+    return (slots & np.uint64(DS_MAX_HASH)).min(axis=0).astype(np.int64)
 
 
 def minhash_signature(
@@ -129,21 +128,6 @@ def optimal_param(
     return opt
 
 
-DS_SIG_SCHEMA = "doc_id bigint, ds_sig array<bigint>"
-DS_BANDED_SCHEMA = (
-    "doc_id bigint, content_hash string, sig array<bigint>, bands array<bigint>"
-)
-# The full pipeline stage shape. It matches signatures.SIG_SCHEMA's column
-# CONTRACT (same names/order; the simhash stage is independent of the
-# minhash scheme, so the ds family carries the poly-family simhash
-# alongside its own sig/bands) but NOT its element types: ds signature
-# values reach 2^32 and genuinely need array<bigint>, while the poly
-# family packs into array<int>. A checkpoint written by one family is
-# therefore NOT schema-identical under the other — resumed checkpoints
-# are family-specific (the resume manifest's input-identity guard keys on
-# the input, and a family switch must re-run from scratch).
-DS_PIPELINE_SCHEMA = DS_BANDED_SCHEMA + ", simhash bigint"
-
 _BAND_MULT = 1000003
 _M31 = (1 << 31) - 1
 
@@ -160,85 +144,3 @@ def band_hashes(sig: np.ndarray, n_bands: int, n_rows: int) -> np.ndarray:
             acc = (acc * _BAND_MULT + int(s)) % _M31
         out[i] = acc
     return out
-
-
-def with_datasketch_signatures(
-    docs: DataFrame,
-    shingle_size: int = 7,
-    num_perm: int = 128,
-    seed: int = DS_SEED,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    banding: tuple[int, int] | None = None,
-    simhash: bool = False,
-    simhash_bits: int | None = None,
-) -> DataFrame:
-    """Arrow-batched datasketch-scheme signatures over the same normalized
-    7-char shingles as the default family.
-
-    With ``banding=(b, r)`` (e.g. from ``optimal_param``), emits the
-    (doc_id, content_hash, sig, bands) shape the LSH operators
-    (operators/lsh.py verified_pairs / candidate_pairs) consume — a drop-in
-    signature family for the pipeline's near-dup stage. ``simhash=True``
-    additionally carries the (family-independent) poly SimHash so the frame
-    satisfies the full pipeline stage contract (signatures.SIG_SCHEMA);
-    ``simhash_bits`` sets its width (defaults to DEFAULT_CONFIG's) and must
-    match the DedupConfig the downstream Hamming blocking reads."""
-    import hashlib as _hl
-
-    from quarrycore_spark.operators.signatures import (
-        char_shingles,
-        normalize_text,
-        poly_simhash,
-    )
-
-    if banding is not None:
-        assert banding[0] <= 1024, (
-            "bandings above 1024 bands break the fused LSH bucket-key "
-            "injectivity (operators/lsh.py _MAX_BANDS)"
-        )
-    if simhash and banding is None:
-        raise ValueError("simhash=True requires banding (pipeline shape)")
-    if simhash_bits is None:
-        from quarrycore_spark.config import DEFAULT_CONFIG as _DC
-
-        simhash_bits = _DC.simhash_bits
-    _sim_bits = simhash_bits
-
-    a, b = permutations(num_perm, seed)
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            nts = [normalize_text(t) for t in pdf[text_col].astype(str)]
-            sigs = [
-                minhash_signature(char_shingles(nt, shingle_size), a, b)
-                for nt in nts
-            ]
-            if banding is None:
-                yield pd.DataFrame({"doc_id": pdf[id_col].values, "ds_sig": sigs})
-            else:
-                nb, nr = banding
-                out = {
-                    "doc_id": pdf[id_col].values,
-                    "content_hash": [
-                        _hl.sha256(nt.encode("utf-8")).hexdigest() for nt in nts
-                    ],
-                    "sig": sigs,
-                    "bands": [band_hashes(s, nb, nr) for s in sigs],
-                }
-                if simhash:
-                    out["simhash"] = pd.array(
-                        [poly_simhash(nt, shingle_size, _sim_bits) for nt in nts],
-                        dtype="int64",
-                    )
-                yield pd.DataFrame(out)
-
-    if banding is None:
-        schema = DS_SIG_SCHEMA
-    elif simhash:
-        schema = DS_PIPELINE_SCHEMA
-    else:
-        schema = DS_BANDED_SCHEMA
-    from quarrycore_spark.operators._partitioning import spread
-
-    return spread(docs.select(id_col, text_col)).mapInPandas(compute, schema=schema)

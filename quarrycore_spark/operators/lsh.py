@@ -28,8 +28,8 @@ from quarrycore_spark.config import DEFAULT_CONFIG, DedupConfig
 # Fused-key multiplier: band_idx slots reserved per band_hash. Any banding
 # up to 1024 bands stays injective (band hashes are mod 2³¹−1, so
 # bkey <= 2⁴¹ fits int64 with room); using a constant rather than the
-# actual band count means every signature family (8-band poly, arbitrary
-# optimal_param datasketch banding) shares one injective key space.
+# actual band count means any DedupConfig banding shares one injective
+# key space.
 _MAX_BANDS = 1024
 
 

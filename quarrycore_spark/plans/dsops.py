@@ -1,7 +1,8 @@
 """Datasketch-family oracle surface: CORRECTNESS-checked queries over the
-real datasketch-scheme kernel (operators/datasketch_compat.py — the
-bit-compatible reimplementation of the public datasketch MinHash the
-reference pins, minhash_redis.py:186-202).
+datasketch-scheme arithmetic of the signature kernel
+(operators/signatures.py, family="datasketch" — the bit-compatible
+reimplementation of the public datasketch MinHash the reference pins,
+minhash_redis.py:186-202; definitions in operators/datasketch_compat.py).
 
 What the oracle can and cannot check: DuckDB has no sha1, so the token
 hash (sha1 → first 4 bytes little-endian) is NOT SQL-expressible; it is
@@ -16,20 +17,21 @@ datasketch-specific — IS checked bit-for-bit here:
   means reproducing exactly that wrap — then mod 2^61−1, masked to
   32 bits; DuckDB side computes in HUGEINT with an explicit % 2^64);
 * the empty-set init value (max hash + 1 = 2^32);
-* the order-sensitive polynomial band fold over the S-curve-optimal
-  (bands, rows) = optimal_param(0.85, 128) slicing.
+* the order-sensitive polynomial band fold over the (bands, rows) =
+  (CFG.lsh_bands, CFG.lsh_rows) slicing — the S-curve optimum
+  optimal_param(0.85, 128), pinned by tests/test_datasketch_compat.py.
 
 The driver ships no token-hash table, so token hashes derive from doc_id
 by a closed-form uint32 formula (same synthesis device as
 structops/mediaops): doc n has `doc_id % 37` tokens (docs with
 doc_id % 37 == 0 pin the empty-set init path) with
 h_i = (doc_id * 2654435761 + i * 2246822519 + 12345) % 2^32.
-The SPARK side feeds those hashes to the REAL kernel
-(datasketch_compat.signature_from_hashes / band_hashes — the same
-functions minhash_signature and with_datasketch_signatures run in
-production); the DUCKDB side recomputes the arithmetic from the
-literals. Any drift in the constants, the wrap, the mask, the init, or
-the band fold breaks the hash match.
+The SPARK side feeds those hashes, one batch at a time, to the REAL
+kernel code — signatures._minhash_pass with the datasketch slot
+arithmetic and signatures._fold_bands, as with_signatures(family=
+"datasketch") runs them; the DUCKDB side recomputes the arithmetic from
+the literals. Any drift in the constants, the wrap, the mask, the init,
+or the band fold breaks the hash match.
 """
 
 from __future__ import annotations
@@ -41,6 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from quarrycore_spark.config import DEFAULT_CONFIG as CFG
 from quarrycore_spark.config import DS_MERSENNE_61
 from quarrycore_spark.functions.dialect import SPARK
 from quarrycore_spark.plans.registry import REGISTRY, Query, register
@@ -54,15 +57,15 @@ _HA, _HB, _HC = 2654435761, 2246822519, 12345
 # Drawn once at import — identical constants reach the Spark kernel and the
 # generated SQL literals, so the check pins the *drawing* too (a seed or
 # draw-order change in permutations() breaks the oracle match).
-from quarrycore_spark.operators.datasketch_compat import (  # noqa: E402
-    band_hashes,
-    optimal_param,
-    permutations,
-    signature_from_hashes,
+from quarrycore_spark.operators.datasketch_compat import permutations  # noqa: E402
+from quarrycore_spark.operators.signatures import (  # noqa: E402
+    _SLOT_ARITH,
+    _fold_bands,
+    _minhash_pass,
 )
 
 _A, _B = permutations(NUM_PERM)
-_NB, _NR = optimal_param(0.85, NUM_PERM)
+_NB, _NR = CFG.lsh_bands, CFG.lsh_rows
 
 
 def synthetic_hashes(doc_id: int) -> np.ndarray:
@@ -79,15 +82,22 @@ def _spark_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids = pdf["doc_id"].to_numpy(np.int64)
-            sigs = [
-                signature_from_hashes(synthetic_hashes(int(d)), _A, _B)
-                for d in ids
-            ]
+            hs = [synthetic_hashes(int(d)) for d in ids]
+            counts = np.array([len(h) for h in hs], dtype=np.int64)
+            # empty token sets keep the init value; the kernel's segments
+            # are the non-empty docs
+            sigs = np.full((len(ids), NUM_PERM), _INIT, dtype=np.int64)
+            live = counts > 0
+            if live.any():
+                sigs[live] = _minhash_pass(
+                    np.concatenate(hs), counts[live], _A, _B,
+                    *_SLOT_ARITH["datasketch"],
+                )
             yield pd.DataFrame(
                 {
                     "doc_id": ids,
-                    "sig": sigs,
-                    "bands": [band_hashes(s, _NB, _NR) for s in sigs],
+                    "sig": list(sigs),
+                    "bands": list(_fold_bands(sigs, CFG)),
                 }
             )
 
@@ -157,8 +167,8 @@ FROM _sig
 
 def _ds_band_hashes(dialect: str) -> str:
     # order-sensitive polynomial fold of each {_NR}-slot slice mod 2^31-1
-    # (datasketch_compat.band_hashes: acc = acc*1000003 + s, seeded with
-    # the slice head) — expanded per band since the fold is a fixed-length
+    # (signatures._fold_bands: acc = acc*1000003 + s, seeded with the
+    # slice head mod 2^31-1) — expanded per band since the fold is a fixed-length
     # recurrence, not a reduce DuckDB can express over ORDINALITY cleanly.
     slots = [
         _slot(dialect, int(a), int(b)) for a, b in zip(_A, _B)

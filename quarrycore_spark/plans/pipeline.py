@@ -252,12 +252,13 @@ def run_pipeline(
     classification-only containment stage; `cascade_threshold` is the
     extraction quality gate (`extract_pages`).
 
-    family selects the near-dup signature scheme end-to-end:
-    "poly" (default) — the vectorized rolling-hash family; "md5" — the
-    oracle-parity scheme; "datasketch" — the reference's actual MinHash
-    scheme (sha1→uint32, mod 2^61-1) with its S-curve-optimal banding,
-    so recall gates against reference semantics exercise THIS production
-    path (tests/test_pipeline.py::test_pipeline_recall_datasketch_family)."""
+    family selects the near-dup signature scheme of the one signature
+    kernel (`with_signatures`): "poly" (default) — the vectorized
+    rolling-hash family; "md5" — the oracle-parity scheme; "datasketch" —
+    the reference's actual MinHash scheme (sha1→uint32, mod 2^61-1) under
+    cfg's banding, which is its S-curve optimum, so recall gates against
+    reference semantics exercise the production kernel
+    (tests/test_pipeline.py::test_pipeline_recall_datasketch_family)."""
     os.makedirs(out_dir, exist_ok=True)
     man = _load_manifest(out_dir) if resume else {"stages": {}}
 
@@ -333,26 +334,14 @@ def run_pipeline(
         .join(extracted.select("doc_id", "extracted_text"), "doc_id")
         .select("doc_id", F.col("extracted_text").alias("text"))
     )
-    def build_sigs():
-        # content_hash is dropped before the checkpoint: the pipeline's
-        # exact layer reads extraction's hash, so the 64-hex column would
-        # be ~64 B/doc of write+read the pair stages never touch.
-        if family == "datasketch":
-            from quarrycore_spark.operators.datasketch_compat import (
-                optimal_param,
-                with_datasketch_signatures,
-            )
-
-            nb, nr = optimal_param(cfg.jaccard_threshold_pct / 100, cfg.num_perm)
-            return with_datasketch_signatures(
-                survivors, cfg.shingle_size, cfg.num_perm,
-                banding=(nb, nr), simhash=True, simhash_bits=cfg.simhash_bits,
-            ).drop("content_hash")
-        # "poly" = the vectorized rolling-hash family (signatures.py) —
-        # same shingle/permutation/banding structure, ~300× cheaper per doc
-        return with_signatures(survivors, cfg, family=family).drop("content_hash")
-
-    sigs = _stage(spark, out_dir, man, "signatures", build_sigs, resume)
+    # content_hash is dropped before the checkpoint: the pipeline's exact
+    # layer reads extraction's hash, so the 64-hex column would be
+    # ~64 B/doc of write+read the pair stages never touch.
+    sigs = _stage(
+        spark, out_dir, man, "signatures",
+        lambda: with_signatures(survivors, cfg, family=family).drop("content_hash"),
+        resume,
+    )
 
     # ---- stage 4: near-dup pair generation (D7-D10) ----------------------
     # ONE materialization for both pair families: minhash-verified and

@@ -160,6 +160,24 @@ def test_ann_topk_query_cap_raises(spark):
         ann_topk(emb, stride=1, max_queries=10).count()
 
 
+def test_ivf_topk_cap_errors_name_both_classes(spark, monkeypatch):
+    """A truncated combined collect cannot tell which sampled class is over
+    its cap, so its one error reports both counts and both strides; an
+    untruncated collect has exact counts and names the over-cap class."""
+    from quarrycore_spark.operators import ann
+
+    monkeypatch.setattr(ann, "MAX_BROADCAST_CENTROIDS", 3)
+    emb = _skewed_embeddings(spark, n=30)  # 30 queries at stride 1, 15 centroids at 2
+    with pytest.raises(RuntimeError) as err:
+        ivf_topk(emb, stride=1, cent_stride=2, max_queries=4)
+    msg = str(err.value)
+    assert "combined cap 9" in msg, msg
+    assert ">=9 query vectors at stride=1 (cap 4)" in msg, msg
+    assert "centroids at stride=2 (cap 3)" in msg, msg
+    with pytest.raises(RuntimeError, match=r"ivf: >3 centroids at stride=2"):
+        ivf_topk(emb, stride=1, cent_stride=2, max_queries=100)
+
+
 def test_ann_topk_handles_batch_smaller_than_k(spark):
     """Partial top-k per batch must cope with batches smaller than k and
     with the query row itself appearing in the batch."""

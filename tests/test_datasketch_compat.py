@@ -67,22 +67,28 @@ def test_optimal_param_matches_config():
 
 
 def test_spark_datasketch_signatures(spark):
-    from quarrycore_spark.operators.datasketch_compat import (
-        with_datasketch_signatures,
-    )
+    """with_signatures(family="datasketch") on Spark: slots carry the uint32
+    datasketch values as their int32 bit pattern, bands are band_hashes
+    under the config's banding."""
+    from quarrycore_spark.operators.datasketch_compat import band_hashes
+    from quarrycore_spark.operators.signatures import with_signatures
 
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"),
-         (2, "the quick brown fox jumps over the lazy dog"),
-         (3, "a completely different document body here")],
-        "doc_id long, text string",
-    )
-    rows = {r["doc_id"]: np.array(r["ds_sig"]) for r in with_datasketch_signatures(docs).collect()}
-    assert (rows[1] == rows[2]).all()
-    assert not (rows[1] == rows[3]).all()
+    texts = {
+        1: "the quick brown fox jumps over the lazy dog",
+        2: "the quick brown fox jumps over the lazy dog",
+        3: "a completely different document body here",
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    rows = {
+        r["doc_id"]: r
+        for r in with_signatures(docs, CFG, family="datasketch").collect()
+    }
+    sigs = {d: np.array(r["sig"], dtype=np.int32).view(np.uint32) for d, r in rows.items()}
+    assert (sigs[1] == sigs[2]).all()
+    assert not (sigs[1] == sigs[3]).all()
     # python-side reference equality
     a, b = permutations(128)
-    exp = minhash_signature(
-        char_shingles(normalize_text("a completely different document body here"), 7), a, b
-    )
-    assert (rows[3] == exp).all()
+    for d, text in texts.items():
+        exp = minhash_signature(char_shingles(normalize_text(text), 7), a, b)
+        assert (sigs[d] == exp).all()
+        assert rows[d]["bands"] == band_hashes(exp, CFG.lsh_bands, CFG.lsh_rows).tolist()

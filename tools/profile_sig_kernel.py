@@ -4,9 +4,13 @@ Runs the exact per-batch work of operators/signatures.with_signatures
 (family='poly') on realistic bench-corpus texts, in P concurrent worker
 processes, and reports per-process wall + a per-phase split:
 
-  prep   — normalize_text + sha256 + _poly_shingle_hashes (per-doc loop)
-  blocked— the cache-blocked minhash+simhash passes
-  fold   — band folding
+  prep      — normalize_text + sha256 + the family's token step
+              (_family_tokens: the batched rolling hash for poly)
+  minhash   — the cache-blocked MinHash pass (_minhash_pass)
+  simhash   — the cache-blocked SimHash pass (_simhash_pass)
+  fold      — band folding (_fold_bands)
+  full_batch— the whole kernel again, as with_signatures calls it
+              (_batch_signatures, with its codepoint-budget chunking)
 
 Usage: python tools/profile_sig_kernel.py [P ...]   (default: 1 4)
 
@@ -41,37 +45,40 @@ def _texts(n: int) -> list[str]:
 
 
 def worker(n_docs: int, q) -> None:
-    import numpy as np
+    import hashlib
 
     from quarrycore_spark.config import DEFAULT_CONFIG as cfg
     from quarrycore_spark.operators import signatures as S
 
+    family = "poly"
     texts = _texts(n_docs)
-    a = np.array([p[0] for p in cfg.minhash_perms], dtype=np.int64)
-    b = np.array([p[1] for p in cfg.minhash_perms], dtype=np.int64)
+    a, b = S._permutations(cfg, family)
     # warm one batch (numpy pools, import costs)
-    S._batch_signatures_poly(texts[:BATCH], cfg, a, b)
+    S._batch_signatures(texts[:BATCH], cfg, a, b, family)
+    names = ("prep", "minhash", "simhash", "fold", "full_batch")
+    phases = dict.fromkeys(names, 0.0)
     t0 = time.time()
-    prep = blocked = 0.0
     for i in range(0, len(texts), BATCH):
         chunk = texts[i : i + BATCH]
-        tp = time.time()
-        # phase split mirrors _batch_signatures_poly's structure (r6:
-        # the batched prep, not the retired per-doc _poly_shingle_hashes)
-        import hashlib
-
+        marks = [time.time()]
         nts = []
-        for t in chunk:
-            nt = S.normalize_text(t)
+        for x in chunk:
+            nt = S.normalize_text(x)
             hashlib.sha256(nt.encode("utf-8")).hexdigest()
             nts.append(nt)
-        S._prep_hashes_batch(nts, cfg.shingle_size)
-        prep += time.time() - tp
-        tb = time.time()
-        S._batch_signatures_poly(chunk, cfg, a, b)
-        blocked += time.time() - tb
-    wall = time.time() - t0
-    q.put({"wall": wall, "prep": prep, "full_batch": blocked})
+        mh, mh_n, h60, h60_n = S._family_tokens(nts, cfg, family)
+        marks.append(time.time())
+        sig = S._minhash_pass(mh, mh_n, a, b, *S._SLOT_ARITH[family])
+        marks.append(time.time())
+        S._simhash_pass(h60, h60_n, cfg.simhash_bits)
+        marks.append(time.time())
+        S._fold_bands(sig, cfg)
+        marks.append(time.time())
+        S._batch_signatures(chunk, cfg, a, b, family)
+        marks.append(time.time())
+        for name, m0, m1 in zip(names, marks, marks[1:]):
+            phases[name] += m1 - m0
+    q.put({"wall": time.time() - t0, **phases})
 
 
 def run(procs: int) -> dict:
